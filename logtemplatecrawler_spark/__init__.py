@@ -5,11 +5,11 @@ tassadarius/LogTemplateCrawler (reference at /root/reference, LGPL-3.0):
 
 * ``core``      — pure-Python, Spark-free re-implementation of the reference's
                   template pipeline semantics (detect → extract → parse →
-                  formalize → filter).  Shared by the vectorized pandas UDFs
+                  formalize → filter).  Shared by the vectorized Arrow UDFs
                   and by the pytest oracle harness, and pinned by golden tests.
 * ``functions`` — native ``pyspark.sql.functions`` column expressions for every
                   predicate/projection the reference implements imperatively.
-* ``operators`` — Arrow pandas-UDF wrappers around ``core`` plus relational
+* ``operators`` — Arrow UDF wrappers around ``core`` plus relational
                   operators (dedup windows, politeness queues, anti-joins).
 * ``sources``   — pages/seeds/robots/frontier table readers + writers
                   (parquet-backed with checkpoint/manifest semantics).

@@ -5,7 +5,9 @@ across four near-identical classes:
 
 * trigger regexes: log4j /root/reference/src/templatecrawler/logextractor/java/log4j.py:13,
   slf4j java/slf4j.py:13, utillogger java/utillogger.py:13, C c/c.py:15.
-* backwards scan to statement start: ``_begin_of_line`` (log4j.py:58-92).
+* backwards scan to statement start: ``_begin_of_line`` (log4j.py:58-92),
+  done with ``str.rfind`` per boundary over a bounded window instead of the
+  reference's per-character walk (see ``statement_begin``).
 * forwards scan to statement end: ``_end_of_line`` (log4j.py:101-113).
 * framework→extractor selection: /root/reference/src/templatecrawler/extractor.py:15-36
   (java: log4j|slf4j|util|utillogger, 'unknown'→log4j; c: always the C extractor).
@@ -75,39 +77,51 @@ def trigger_for(lang: str, framework: str) -> Optional[re.Pattern]:
     return None
 
 
+# Boundaries of the backwards scan: (text, offset of its last char,
+# resolves-by-line-skip).  A hit is reported at the position of the text's
+# LAST char — the char the reference's walk is on when it recognizes it.
+_BOUNDARIES = (
+    (";", 0, False), ("{", 0, True), ("}", 0, True), ("@", 0, True),
+    (":", 0, True), ("*/", 1, False), ("//", 1, True), ("->", 1, False),
+)
+_BEGIN_WINDOW = 128
+_WS_RUN = re.compile(r"\s*")  # \s is exactly str.isspace() for str patterns
+
+
+def _last_boundary(data: str, lo: int, index: int):
+    """(position, by_line) of the rightmost boundary whose last char sits in
+    [lo, index); a position below ``lo`` (lo >= 1) means there is none."""
+    best, by_line = -1, False
+    for text, last, skip in _BOUNDARIES:
+        # rfind's -1 maps to -1 or 0 here, both below lo.
+        pos = data.rfind(text, lo - last, index) + last
+        if pos > best:
+            best, by_line = pos, skip
+    return best, by_line
+
+
 def statement_begin(data: str, index: int) -> int:
     """Backwards scan from a trigger-match end to the statement start.
 
-    Faithful re-expression of ``_begin_of_line`` (log4j.py:58-92): walk
-    backwards until a boundary char; boundaries ``;``, ``*/``, ``->`` resolve
-    via the whitespace-run bookkeeping, while ``{``, ``}``, ``//``, ``@``,
-    ``:`` resolve by skipping forward past the boundary's line.
+    Re-expression of ``_begin_of_line`` (log4j.py:58-92): the reference walks
+    backwards char by char, examining positions index-1 down to 1 (never 0),
+    until a boundary char; boundaries ``;``, ``*/``, ``->`` resolve via the
+    whitespace-run bookkeeping (the statement starts after the whitespace
+    run that follows the boundary, at most at ``index``), while ``{``,
+    ``}``, ``//``, ``@``, ``:`` resolve by skipping forward past the
+    boundary's line.  The nearest boundary is found with one ``str.rfind``
+    per boundary, over a fixed window before ``index`` first and the whole
+    prefix only when the window holds none; no boundary → 0.
     """
-    space_run = 0
-    back = 1
-    while index - back > 0:
-        cur = data[index - back]
-        prev = data[index - back - 1]
-        if cur == ";":
-            return index - back + space_run + 1
-        if cur == "{" or cur == "}":
-            return _skip_past_line(data, index - back)
-        if cur == "/" and prev == "*":
-            return index - back + space_run + 1
-        if cur == "/" and prev == "/":
-            return _skip_past_line(data, index - back)
-        if cur == "@":
-            return _skip_past_line(data, index - back)
-        if cur == ":":
-            return _skip_past_line(data, index - back)
-        if prev == "-" and cur == ">":
-            return index - back + space_run + 1
-        if cur.isspace():
-            space_run += 1
-        else:
-            space_run = 0
-        back += 1
-    return 0
+    lo = max(1, index - _BEGIN_WINDOW)
+    pos, by_line = _last_boundary(data, lo, index)
+    if pos < lo:
+        pos, by_line = _last_boundary(data, 1, lo)
+        if pos < 1:
+            return 0
+    if by_line:
+        return _skip_past_line(data, pos)
+    return _WS_RUN.match(data, pos + 1, index).end()
 
 
 def _skip_past_line(data: str, offset: int) -> int:

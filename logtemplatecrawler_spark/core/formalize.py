@@ -29,6 +29,7 @@ single sanctioned deviation knob.
 
 from __future__ import annotations
 
+import re
 import zlib
 from functools import lru_cache
 from typing import List, Optional, Tuple
@@ -56,40 +57,38 @@ TOKEN_TYPES: List[Tuple[str, List[str]]] = [
 ]
 
 
+# A slot '{}', a named brace '{…}' (any chars but '}', so '{a{b}' is one
+# named brace, as in the reference), or a lone '{' that no '}' follows.
+_BRACE_RE = re.compile(r"\{\}|\{[^}]+\}|\{")
+
+
 def segment_template(template: str) -> List[str]:
     """Split a parsed template into literal runs and '{}' slot markers.
 
-    Faithful re-expression of ``_parse_string`` (formalizer.py:68-98),
-    including the bounded-iteration guard (the reference's ``for i in
-    range(len(inp))`` caps the loop even when a lone '{' with no closing '}'
-    stalls the cursor) and the '{named}'→'{{named}}' escaping.
+    Re-expression of ``_parse_string`` (formalizer.py:68-98) as one scan over
+    the braces, including the '{named}'→'{{named}}' escaping.  QUIRK: a lone
+    '{' with no closing '}' stalls the reference's cursor until its
+    ``for i in range(len(inp))`` bound ends the loop (formalizer.py:87-91),
+    so everything from that '{' on is dropped — here the scan stops there.
     """
     out: List[str] = []
     literal = ""
     pos = 0
-    n = len(template)
-    for _ in range(n):
-        if pos >= n:
+    for m in _BRACE_RE.finditer(template):
+        brace = m[0]
+        literal += template[pos:m.start()]
+        if brace == "{":
             break
-        ch = template[pos]
-        if ch == "{":
-            rest = template[pos + 1:]
-            if len(rest) > 0 and rest[0] == "}":
-                if literal:
-                    out.append(literal)
-                out.append("{}")
-                pos += 2
-                literal = ""
-            else:
-                close = rest.find("}")
-                if close > 0:
-                    literal += "{{" + rest[:close] + "}}"
-                    pos += close + 2
-                # close in (-1, 0): cursor stalls; the range() bound exits —
-                # reference behavior (formalizer.py:87-91).
+        pos = m.end()
+        if brace == "{}":
+            if literal:
+                out.append(literal)
+            out.append("{}")
+            literal = ""
         else:
-            literal += ch
-            pos += 1
+            literal += "{" + brace + "}"
+    else:
+        literal += template[pos:]
     if literal:
         out.append(literal)
     return out

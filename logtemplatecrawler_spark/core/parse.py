@@ -6,14 +6,17 @@ format-call walker `_parse_format` :268-341, argument counter :442-474,
 role trimming :476-491, printf rewrite :13,493-499) and the C specialization
 at logparser/c.py:5-60.
 
-The parser walks the raw call expression token-by-token:
+The raw call expression is lexed once into a token list
+(``tokenize.lex``) and the walkers share an integer cursor into it, where the
+reference pulls tokens one at a time from a char stream:
 
 * ``_read_variable`` scans a (possibly dotted) expression; when it sees
-  ``name(`` where ``name`` maps to a known formatting function it re-lexes
-  the call from the '(' char to count arguments, trims the function's role
-  template (['skip','str','...']-style) to that count, and descends into
-  ``_parse_format``; otherwise brackets are tracked and the expression is
-  returned as a plain variable.
+  ``name(`` where ``name`` maps to a known formatting function it counts
+  the call's arguments from the '(' token's index (the reference re-lexes a
+  substring from the '(' char, which yields the same tokens), trims the
+  function's role template (['skip','str','...']-style) to that count, and
+  descends into ``_parse_format``; otherwise brackets are tracked and the
+  expression is returned as a plain variable.
 * ``_parse_format`` walks the call's tokens under the current role: string
   literals under role 'str' append to the message (printf specifiers
   rewritten to '{}'), variables append '{}' + are recorded as arguments,
@@ -50,7 +53,7 @@ from __future__ import annotations
 import re
 from typing import List, Optional, Tuple
 
-from logtemplatecrawler_spark.core.tokenize import TokenStream, is_unary_op
+from logtemplatecrawler_spark.core.tokenize import Token, is_unary_op, lex
 
 # java.py:13 — note '[0-9+#-.]' includes the '#'..'.' char *range* and
 # '[l|hh|ll|j|z|tL]?' is a single-char class {l,|,h,j,z,t,L}; kept verbatim.
@@ -128,12 +131,14 @@ C_FUNCS = {
 
 _PARSEABLE_STYLES = ("format", "simple", "printf")
 
+_OPEN = ("punc", "(")
+_CLOSE = ("punc", ")")
+_COMMA = ("punc", ",")
+
 
 def rewrite_printf_specs(s: str) -> str:
     """printf-style %-specifiers → '{}' (java.py:493-499)."""
-    if PRINTF_SPEC_RE.search(s):
-        return PRINTF_SPEC_RE.sub("{}", s)
-    return s
+    return PRINTF_SPEC_RE.sub("{}", s)
 
 
 def _lookup_func(name: str, funcs: dict) -> Tuple[Optional[str], Optional[list]]:
@@ -156,39 +161,33 @@ def _flatten(nested) -> List[str]:
     return out
 
 
-def _count_call_args(lexer: TokenStream) -> int:
+def _count_call_args(tokens: List[Token], i: int = 0) -> int:
     """Count top-level commas inside the first call's parens (java.py:442-474).
 
-    Returns 0 for an empty call ``()`` via the previous-token check; the
-    initial count is 1 (a call with any token and no commas has one arg).
+    The call is the first '(' at or after token ``i`` (the parser passes the
+    '(' itself).  Returns 0 for an empty call ``()`` (the reference's
+    previous-token check); the initial count is 1 (a call with any token and
+    no commas has one arg).
     """
-    prev: Optional[Tuple[str, str]] = None
-    while not lexer.eof():
-        kind, tok = lexer.peek()
-        if kind == "punc" and tok == "(":
-            prev = (kind, tok)
-            lexer.next()
-            break
-        lexer.next()
-    if lexer.eof():
+    n = len(tokens)
+    while i < n and tokens[i] != _OPEN:
+        i += 1
+    start = i + 1
+    if start >= n:
         raise ValueError("Does not contain a function call")
 
-    depth: List[str] = []
+    depth = 0
     count = 1
-    while not lexer.eof():
-        kind, tok = lexer.peek()
-        if kind == "punc" and tok == ")" and not depth:
-            if prev == ("punc", "("):
-                return 0
-            return count
-        elif kind == "punc" and tok == "(":
-            depth.append(tok)
-        elif kind == "punc" and tok == ")":
-            depth.pop()
-        elif kind == "punc" and tok == "," and not depth:
+    for j in range(start, n):
+        tok = tokens[j]
+        if tok == _CLOSE:
+            if not depth:
+                return 0 if j == start else count
+            depth -= 1
+        elif tok == _OPEN:
+            depth += 1
+        elif tok == _COMMA and not depth:
             count += 1
-        prev = (kind, tok)
-        lexer.next()
     return count
 
 
@@ -209,8 +208,13 @@ def _trim_roles(roles: List[str], nargs: int) -> Optional[List[str]]:
     return trimmed
 
 
-def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]], funcs: dict):
-    """Walk a formatting call under its role template (java.py:268-341)."""
+def _parse_format_call(tokens: List[Token], i: int, roles: Optional[List[str]],
+                       funcs: dict):
+    """Walk a formatting call under its role template (java.py:268-341).
+
+    ``i`` is the call's '(' token; returns (message, variables, cursor) with
+    the cursor on the closing ')' (not consumed) or past the end.
+    """
     if not roles:
         raise ValueError("Trying to parse format without argument. Aborting...")
 
@@ -219,13 +223,14 @@ def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]], funcs: di
     message = ""
     variables: list = []
     depth: List[str] = []
-    while not lexer.eof():
-        kind, tok = lexer.peek()
+    n = len(tokens)
+    while i < n:
+        kind, tok = tokens[i]
 
         if kind == "punc" and tok == "," and role != "...":
             role_idx += 1
             if role_idx >= len(roles):
-                raise ValueError(f"Missparsing number of arguments")
+                raise ValueError("Missparsing number of arguments")
             role = roles[role_idx]
         elif role == "skip":
             pass
@@ -240,79 +245,75 @@ def _parse_format_call(lexer: TokenStream, roles: Optional[List[str]], funcs: di
         elif kind == "str":
             message += rewrite_printf_specs(tok)
         elif kind == "num" and role == "str":
-            message += str(tok)
+            message += tok
         elif kind == "num" and role == "...":
             variables.append(tok)
         elif kind == "var" or (kind == "op" and is_unary_op(tok)):
-            sub_mode, sub_payload, sub_args = _read_variable(lexer, funcs)
+            sub_mode, sub_payload, sub_args, i = _read_variable(tokens, i, funcs)
             if sub_mode == "simple":
                 variables.append("".join(sub_payload))
                 if role == "str":
                     message += "{}"
-            if sub_mode == "nested":
+            else:
                 message += sub_payload
                 variables.append(sub_args)
         elif role == "str" and kind == "op" and tok == "+":
-            lexer.next()
-            kind, tok = lexer.peek()
+            i += 1
+            kind, tok = tokens[i]  # IndexError after a trailing '+' — see parse_statement.
             if kind == "str":
                 message += tok
             elif kind == "var":
-                sub_mode, sub_payload, _ = _read_variable(lexer, funcs)
+                sub_mode, sub_payload, _, i = _read_variable(tokens, i, funcs)
+                # a nested call after '+' adds nothing to the message.
                 if sub_mode == "simple" and sub_payload:
                     message += "{}"
                     variables += sub_payload  # list-extend — reference java.py:335.
-                elif sub_mode == "nested":
-                    pass
 
-        lexer.next()
-    rewrite_printf_specs(message)  # computed-and-discarded, as at java.py:340.
-    return message, variables
+        i += 1
+    # java.py:340 also computes rewrite_printf_specs(message) and discards it.
+    return message, variables, i
 
 
-def _read_variable(lexer: TokenStream, funcs: dict):
-    """Scan one expression; descend into known formatting calls (java.py:384-432).
+def _read_variable(tokens: List[Token], i: int, funcs: dict):
+    """Scan one expression from token ``i``; descend into known formatting
+    calls (java.py:384-432).
 
-    Returns ('simple', token-texts, None) for a plain expression or
-    ('nested', message, variables) after descending into a formatting call.
-    Raises ValueError at EOF (java.py:432) — the row is then dropped.
+    Returns ('simple', token-texts, None, cursor) for a plain expression —
+    the cursor on its stopping token, not consumed — or ('nested', message,
+    variables, cursor) after descending into a formatting call.  Raises
+    ValueError at EOF (java.py:432) — the row is then dropped.
     """
-    depth: List[str] = []
+    depth = 0
     gathered: List[str] = []
     prev_was_ident = False
-    while not lexer.eof():
-        kind, tok = lexer.peek()
-        if kind == "punc" and tok == "," and not depth:
-            return "simple", gathered, None
+    n = len(tokens)
+    while i < n:
+        kind, tok = tokens[i]
+        if kind == "punc":
+            if tok == "," and not depth:
+                return "simple", gathered, None, i
+            if tok == "(":
+                if prev_was_ident:
+                    style, default_roles = _lookup_func(gathered[-1], funcs)
+                    if style in _PARSEABLE_STYLES:
+                        # Count this call's args from its '(' (the reference
+                        # re-lexes from that char, java.py:404-407; lexing is
+                        # context-free, so the tokens from i on are the same).
+                        roles = _trim_roles(default_roles, _count_call_args(tokens, i))
+                        message, variables, i = _parse_format_call(tokens, i, roles, funcs)
+                        return "nested", message, variables, i
+                depth += 1
+            elif tok == ")":
+                if not depth:
+                    return "simple", gathered, None, i
+                depth -= 1
+            prev_was_ident = False
         elif kind == "op" and tok == "+" and not depth:
-            return "simple", gathered, None
-        elif kind == "var":
-            prev_was_ident = True
-        elif kind == "punc" and tok == "(" and prev_was_ident:
-            prev_was_ident = False
-            style, default_roles = _lookup_func(gathered[-1], funcs)
-            if style in _PARSEABLE_STYLES:
-                # Re-lex from the '(' character to count this call's args
-                # (java.py:404-407) — char_pos sits just past the peeked '('.
-                sub = TokenStream(lexer.source[lexer.char_pos - 1:])
-                nargs = _count_call_args(sub)
-                roles = _trim_roles(default_roles, nargs)
-                message, variables = _parse_format_call(lexer, roles, funcs)
-                return "nested", message, variables
-            else:
-                depth.append("(")
-        elif kind == "punc" and tok == "(":
-            prev_was_ident = False
-            depth.append("(")
-        elif kind == "punc" and tok == ")":
-            prev_was_ident = False
-            if not depth:
-                return "simple", gathered, None
-            depth.pop()
+            return "simple", gathered, None, i
         else:
-            prev_was_ident = False
+            prev_was_ident = kind == "var"
         gathered.append(tok)
-        lexer.next()
+        i += 1
     raise ValueError("Unexpected EOF")
 
 
@@ -325,13 +326,13 @@ def parse_statement(raw: str, lang: str, framework: str) -> Optional[Tuple[str, 
     map entirely (c.py:51-54).
     """
     funcs = C_FUNCS if lang == "c" else FRAMEWORK_FUNCS.get(framework, SLF4J_FUNCS)
-    lexer = TokenStream(raw)
     try:
-        mode, payload, variables = _read_variable(lexer, funcs)
-    # TypeError: unpacking peek()==None after a trailing '+' — the reference
-    # does not catch it (it would crash the whole batch, java.py:327-328);
-    # a distributed engine must not, so we drop the row instead (deviation).
-    except (ValueError, IndexError, TypeError):
+        mode, payload, variables, _ = _read_variable(lex(raw), 0, funcs)
+    # A trailing '+' reads past the last token (IndexError here); the
+    # reference unpacks peek()==None there and its TypeError is not caught
+    # (it would crash the whole batch, java.py:327-328).  A distributed
+    # engine must not, so we drop the row instead (deviation).
+    except (ValueError, IndexError):
         return None
     if mode != "nested":
         return None  # 'simple' → empty template → dropped (java.py:253, :63).

@@ -9,133 +9,69 @@ Token kinds: ``str`` (double-quoted literal, quotes stripped), ``punc``
 decimal point, so ``3.14`` lexes as num/punc/num), ``var`` (maximal run of
 anything that is neither punctuation nor an operator char).
 
+Mechanism: ``lex`` tokenizes a whole statement in one pass of a single
+compiled alternation regex (whitespace skip, then str | punc | op | num |
+var in the reference's dispatch order) and returns the token list; the
+parser walks it with an integer cursor.  The reference's pull lexer is
+context-free at token boundaries (its only state is the char position), so
+one up-front pass yields exactly the tokens it would hand out one at a time.
+
 Replicated QUIRKs:
 
 * the escape check in ``_read_escaped`` compares one char against the
   two-char literal ``r'\\\\'`` (javatokenizer.py:77), so escape handling never
   triggers: a string literal is simply "all chars up to the next unescaped…
-  er, any next double quote", backslashes included verbatim.
+  er, any next double quote", backslashes included verbatim; an unclosed
+  literal runs to the end of the statement.
 * the ``var`` character class (javatokenizer.py:13) is the complement of
   punc+ops, so identifiers absorb whitespace and quote chars mid-token
   (``x  )`` → var token ``'x  '`` is impossible since ')' stops it, but
   ``foo bar,`` lexes as one var token ``'foo bar'``).
-* unknown characters raise ValueError via ``croak`` (strstream.py:18-19).
+* unknown characters raise ValueError via ``croak`` (strstream.py:18-19) —
+  unreachable here: every non-whitespace char is a quote, punc, op, digit
+  or (by complement) var char, so ``lex`` is total.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Optional, Tuple
+from typing import List, Tuple
 
-_WS_RE = re.compile(r"\s")
-_OP_RE = re.compile(r"[+*|^/%=\&\-<>!]")
-_PUNC_RE = re.compile(r"[;,.(){}[\]]")
-_VAR_RE = re.compile(r"[^.+*|^/%=\&\-<>!;,(){}[\]]")
-_DIGIT_RE = re.compile(r"\d")
+_PUNC = r";,.(){}[\]"
+_OP = r"+*|^/%=\&\-<>!"
+
+# One group per kind: str | punc | op | num | var.  A var token may hold
+# whitespace but not start with it, so trailing whitespace that the
+# leading skip backs off from never becomes a var token.
+_TOKEN_RE = re.compile(
+    rf'\s*(?:"([^"]*)"?|([{_PUNC}])|([{_OP}]+)|(\d+)'
+    rf'|([^\s{_PUNC}{_OP}][^{_PUNC}{_OP}]*))'
+)
 _UNARY_RE = re.compile(r"^(\+\+|-|--|!)$")
 
-# Hot path: the lexer classifies every character, and a per-char re.search
-# is ~10× slower than set membership.  The ASCII classification tables are
-# derived FROM the regexes above (so they cannot drift); non-ASCII chars
-# fall back to the regex — behavior stays exactly equivalent.
-_WS_ASCII = frozenset(chr(c) for c in range(128) if _WS_RE.search(chr(c)))
-_OP_ASCII = frozenset(chr(c) for c in range(128) if _OP_RE.search(chr(c)))
-_PUNC_ASCII = frozenset(chr(c) for c in range(128) if _PUNC_RE.search(chr(c)))
-_VAR_ASCII = frozenset(chr(c) for c in range(128) if _VAR_RE.search(chr(c)))
-_DIGIT_ASCII = frozenset(chr(c) for c in range(128) if _DIGIT_RE.search(chr(c)))
-
-
-def _classify_sets(pattern: re.Pattern, ascii_set: frozenset):
-    def check(ch: str) -> bool:
-        return ch in ascii_set if ch < "\x80" else bool(pattern.search(ch))
-    return check
-
-
-_is_ws = _classify_sets(_WS_RE, _WS_ASCII)
-_is_op = _classify_sets(_OP_RE, _OP_ASCII)
-_is_punc = _classify_sets(_PUNC_RE, _PUNC_ASCII)
-_is_var = _classify_sets(_VAR_RE, _VAR_ASCII)
-_is_digit = _classify_sets(_DIGIT_RE, _DIGIT_ASCII)
-
 Token = Tuple[str, str]
+
+
+def lex(source: str) -> List[Token]:
+    """All ``(kind, text)`` tokens of a raw statement, in order."""
+    out: List[Token] = []
+    append = out.append
+    # Only the matched kind's group is non-empty (an empty str literal
+    # leaves all five empty, hence the str fallback).
+    for string, punc, op, num, var in _TOKEN_RE.findall(source):
+        if punc:
+            append(("punc", punc))
+        elif var:
+            append(("var", var))
+        elif op:
+            append(("op", op))
+        elif num:
+            append(("num", num))
+        else:
+            append(("str", string))
+    return out
 
 
 def is_unary_op(tok: str) -> bool:
     """Full-token unary-operator test (javatokenizer.py:14,21-22)."""
     return bool(_UNARY_RE.match(tok))
-
-
-class TokenStream:
-    """Pull lexer with one-token lookahead over a raw statement string.
-
-    ``source``/``char_pos`` expose the underlying character cursor because the
-    parser re-lexes a sub-expression from the char position of a peeked '('
-    (logparser/java.py:404).
-    """
-
-    __slots__ = ("source", "char_pos", "_pending")
-
-    def __init__(self, source: str):
-        self.source = source
-        self.char_pos = 0
-        self._pending: Optional[Token] = None
-
-    # -- char-level helpers -------------------------------------------------
-    def _char_eof(self) -> bool:
-        return self.char_pos >= len(self.source)
-
-    def _take_while(self, check) -> str:
-        start = self.char_pos
-        s = self.source
-        n = len(s)
-        pos = start
-        while pos < n and check(s[pos]):
-            pos += 1
-        self.char_pos = pos
-        return s[start:pos]
-
-    def _take_string_literal(self) -> str:
-        # Consume opening quote; read verbatim until the next '"' (escape
-        # handling never fires in the reference — see module QUIRKs).
-        self.char_pos += 1
-        s = self.source
-        end = s.find('"', self.char_pos)
-        if end < 0:
-            body = s[self.char_pos:]
-            self.char_pos = len(s)
-            return body
-        body = s[self.char_pos:end]
-        self.char_pos = end + 1
-        return body
-
-    # -- token-level interface ---------------------------------------------
-    def _lex(self) -> Optional[Token]:
-        self._take_while(_is_ws)
-        if self._char_eof():
-            return None
-        ch = self.source[self.char_pos]
-        if ch == '"':
-            return "str", self._take_string_literal()
-        if _is_punc(ch):
-            self.char_pos += 1
-            return "punc", ch
-        if _is_op(ch):
-            return "op", self._take_while(_is_op)
-        if _is_digit(ch):
-            return "num", self._take_while(_is_digit)
-        if _is_var(ch):
-            return "var", self._take_while(_is_var)
-        raise ValueError(f"Can't handle character {ch} [offset {self.char_pos}]")
-
-    def peek(self) -> Optional[Token]:
-        if not self._pending:
-            self._pending = self._lex()
-        return self._pending
-
-    def next(self) -> Optional[Token]:
-        tok = self._pending
-        self._pending = None
-        return tok or self._lex()
-
-    def eof(self) -> bool:
-        return self.peek() is None

@@ -5,6 +5,8 @@ Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 Defaults: /root/testdata/sf0.001, all queries.
 """
 
+import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -19,6 +21,18 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
+SPILL_DIR = "/tmp/duckdb_spill"
+
+
+def _duckdb_limits(spill_dir: str):
+    """(memory, spill) caps in MiB: 60% of physical RAM (MemTotal) and 80%
+    of the free disk under the spill directory."""
+    mem_total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    os.makedirs(spill_dir, exist_ok=True)
+    disk_free = shutil.disk_usage(spill_dir).free
+    return int(mem_total * 0.6) >> 20, int(disk_free * 0.8) >> 20
+
+
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(QUERIES)
@@ -31,10 +45,12 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     # quadratic twins (e.g. the within-cell semantic pair SQL) need room at
-    # stress scale: let DuckDB spill to disk instead of dying in-memory
-    con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    con.execute("SET max_temp_directory_size='60GiB'")
-    con.execute("SET memory_limit='48GiB'")
+    # stress scale: let DuckDB spill to disk instead of dying in-memory,
+    # within limits taken from this host rather than fixed sizes
+    memory_mib, spill_mib = _duckdb_limits(SPILL_DIR)
+    con.execute(f"SET temp_directory='{SPILL_DIR}'")
+    con.execute(f"SET max_temp_directory_size='{spill_mib}MiB'")
+    con.execute(f"SET memory_limit='{memory_mib}MiB'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"

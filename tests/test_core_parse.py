@@ -10,7 +10,7 @@ from logtemplatecrawler_spark.core.parse import (
     _count_call_args,
     _trim_roles,
 )
-from logtemplatecrawler_spark.core.tokenize import TokenStream
+from logtemplatecrawler_spark.core.tokenize import lex
 
 
 def test_slf4j_slots_and_varargs():
@@ -80,10 +80,10 @@ def test_printf_spec_rewrite():
 
 
 def test_count_call_args():
-    assert _count_call_args(TokenStream('foo("a", b, c)')) == 3
-    assert _count_call_args(TokenStream("foo()")) == 0
-    assert _count_call_args(TokenStream('foo(bar(x, y), z)')) == 2
-    assert _count_call_args(TokenStream('foo("only")')) == 1
+    assert _count_call_args(lex('foo("a", b, c)')) == 3
+    assert _count_call_args(lex("foo()")) == 0
+    assert _count_call_args(lex('foo(bar(x, y), z)')) == 2
+    assert _count_call_args(lex('foo("only")')) == 1
 
 
 def test_trim_roles_quirks():

@@ -18,7 +18,7 @@ from logtemplatecrawler_spark.core.formalize import (
     segment_template,
 )
 from logtemplatecrawler_spark.core.parse import parse_statement
-from logtemplatecrawler_spark.core.tokenize import TokenStream
+from logtemplatecrawler_spark.core.tokenize import lex
 
 PLACEHOLDER_NAMES = {name for name, _ in TOKEN_TYPES}
 
@@ -116,14 +116,17 @@ def test_formalize_total_and_slots_resolved(template, args):
 @given(arbitrary)
 @settings(max_examples=300, deadline=None)
 def test_tokenizer_consumes_all_or_raises(s):
-    toks = []
-    stream = TokenStream(s)
-    try:
-        while not stream.eof():
-            toks.append(stream.next())
-    except ValueError:
-        return  # croak on unhandled char — reference behavior
-    # concatenating var/num/punc/op token texts (plus quoted strs) must not
-    # exceed the input length (tokens never invent characters)
-    total = sum(len(t[1]) for t in toks)
-    assert total <= len(s)
+    """``lex`` tokens never invent characters: each token's text occurs in
+    the input after the previous token's, so the texts (quotes stripped)
+    never exceed the input length.
+
+    The reference lexer's ``croak`` ValueError on an unhandled character
+    (strstream.py:18-19) is unreachable: the var class is the complement of
+    punc+op, so every non-whitespace char starts some token and ``lex``
+    never raises.
+    """
+    pos = 0
+    for _kind, text in lex(s):
+        found = s.find(text, pos)
+        assert found >= 0
+        pos = found + len(text)

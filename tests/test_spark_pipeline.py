@@ -87,6 +87,22 @@ def test_plan_shape_is_scalable(spark):
         assert "ArrowEvalPython" in plan
 
 
+def test_each_udf_evaluated_once(spark):
+    """Each template UDF sits in exactly one ArrowEvalPython node of the
+    executed plan.  Pins the ``asNondeterministic`` note in
+    operators/template_udfs.py: without it Catalyst duplicates
+    ``parse_and_formalize`` under the downstream null filter."""
+    for dedup in (False, True):
+        df = extract_templates(pages_df(spark, 20, seed=42), dedup=dedup)
+        df.write.format("noop").mode("overwrite").save()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+        for udf in ("extract_raws", "parse_and_formalize"):
+            hits = [ln for ln in nodes if f"{udf}(" in ln]
+            assert len(hits) == 1, (udf, plan)
+            assert hits[0].count(f"{udf}(") == 1, (udf, plan)
+
+
 def test_detect_vote_matches_core(spark, fixture_pages):
     """Native ``detect_vote`` (U1/U4 rule-vote mode, no UDF) ≡ the pure
     twin ``core.detect.detect_page``'s vote over every fixture page plus

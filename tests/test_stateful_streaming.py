@@ -132,6 +132,34 @@ def test_budget_fn_orders_across_arrow_chunks():
     assert sorted(out["url"]) == ["https://h.org/a", "https://h.org/c"]
 
 
+def test_budget_fn_exhausted_host_drains_without_output():
+    """A host whose budget is already spent yields no rows, keeps its state,
+    and drains its chunks without reading their urls (the chunks here have
+    no url column, so building the url list would raise)."""
+    import pandas as pd
+
+    from logtemplatecrawler_spark.streaming.stateful_dedup import _budget_fn
+
+    class _SpentState:
+        exists = True
+        get = (3,)
+
+        def update(self, value):
+            self.updated = value
+
+    drained = []
+
+    def chunks():
+        yield pd.DataFrame({"other": ["x"]})
+        yield pd.DataFrame({"other": ["y"]})
+        drained.append(True)
+
+    state = _SpentState()
+    assert list(_budget_fn(3)(("h.org",), chunks(), state)) == []
+    assert drained == [True]
+    assert state.updated == (3,)
+
+
 def test_flag_fn_orders_across_arrow_chunks():
     """r6 fix: a band bucket bigger than one Arrow chunk arrives as SEVERAL
     pandas DataFrames in shuffle order; the state function must sort the
